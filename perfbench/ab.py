@@ -13,8 +13,13 @@ that runs first alternates from pair to pair. CPU steal is sampled from
 Every run is appended to ``--out`` as one JSON line. The summary gives,
 per end-to-end metric, each side's median and quartiles, how many pairs
 the change won, and the verdict of the rule in NOTES.md: a gain needs at
-least 9 wins in 10 pairs and a median difference larger than the spread
-(interquartile range) of the parent's own runs.
+least 9 wins in 10 pairs, a median difference larger than the spread
+(interquartile range) of the parent's own runs, and no more failures on
+the change than on the parent. Each side's failures (failed reps, plus
+runs that exited non-zero or were incorrect) are printed too.
+
+The run length is always BENCHMARK.json's ``run_seconds``, so that both
+sides and the benchmark itself measure alike.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ import sys
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+SEED0 = 1000  # pair i runs seed SEED0 + i on both sides
 
 
 def cpu_times() -> tuple[int, int]:
@@ -65,7 +71,19 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def failures(records: list[dict], side: str) -> int:
+    """Failed reps plus failed (non-zero exit) or incorrect runs of one side."""
+    n = 0
+    for r in records:
+        if r["side"] == side:
+            res = r["result"]
+            n += res is None or not res["correct"]
+            n += res["failed"] if res is not None else 0
+    return n
+
+
 def summarize(records: list[dict], spec: list[dict]) -> list[str]:
+    fails = {side: failures(records, side) for side in ("parent", "change")}
     lines = []
     pairs: dict[int, dict] = {}
     for r in records:
@@ -81,7 +99,8 @@ def summarize(records: list[dict], spec: list[dict]) -> list[str]:
         chg = [p["change"][name]["value"] for p in both]
         wins = sum((c < a) if lower else (c > a) for a, c in zip(par, chg))
         pq, cq = quartiles(par), quartiles(chg)
-        gain = wins >= 0.9 * len(both) and abs(cq[1] - pq[1]) > (pq[2] - pq[0])
+        gain = (wins >= 0.9 * len(both) and abs(cq[1] - pq[1]) > (pq[2] - pq[0])
+                and fails["change"] <= fails["parent"])
         worse = (cq[1] - pq[1]) if lower else (pq[1] - cq[1])
         regress = worse > m.get("bound", float("inf")) * abs(pq[1])
         verdict = "gain" if gain else "regression" if regress else "no claim"
@@ -91,9 +110,11 @@ def summarize(records: list[dict], spec: list[dict]) -> list[str]:
             f"change wins {wins}/{len(both)}  -> {verdict}"
         )
     steal = [r["steal_pct"] for r in records]
-    failed = [r for r in records if r["result"] is None or not r["result"]["correct"]]
+    lines.append(f"failures (failed reps + failed or incorrect runs): "
+                 f"parent {fails['parent']}, change {fails['change']}"
+                 + ("  -> no gain counts" if fails["change"] > fails["parent"] else ""))
     lines.append(f"steal: median {statistics.median(steal):.2f}% max {max(steal):.2f}%; "
-                 f"runs {len(records)}, failed or incorrect {len(failed)}")
+                 f"runs {len(records)}")
     return lines
 
 
@@ -103,22 +124,19 @@ def main(argv=None) -> int:
     p.add_argument("--change", required=True, help="root of the changed checkout")
     p.add_argument("--workload", required=True)
     p.add_argument("--pairs", type=int, default=10)
-    p.add_argument("--seconds", type=int, default=None,
-                   help="default: run_seconds of BENCHMARK.json")
-    p.add_argument("--seed0", type=int, default=1000)
     p.add_argument("--out", default="ab.jsonl")
     args = p.parse_args(argv)
 
     with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as fh:
         bench = json.load(fh)
-    seconds = args.seconds or bench["run_seconds"]
+    seconds = bench["run_seconds"]
     roots = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
     records = []
     for i in range(args.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            rec = {"pair": i, "side": side, "first": order[0], "seed": args.seed0 + i,
-                   **run_side(roots[side], args.workload, args.seed0 + i, seconds)}
+            rec = {"pair": i, "side": side, "first": order[0], "seed": SEED0 + i,
+                   **run_side(roots[side], args.workload, SEED0 + i, seconds)}
             records.append(rec)
             with open(args.out, "a") as fh:
                 fh.write(json.dumps(rec) + "\n")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Deployed-pipeline benchmark for ``jobs/build_graph.py``.
 
-    python3 perfbench/run.py --workload ontology_hpo18k --seed 1 --seconds 24 --trace 0
+    python3 perfbench/run.py --workload ontology_hpo18k --seed 1 --seconds 14 --trace 0
     python3 perfbench/run.py --smoke
 
 Run from the root of a checkout. One Spark session is built at
@@ -45,10 +45,8 @@ def parse_args(argv=None):
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", choices=sorted(WORKLOADS))
     p.add_argument("--seed", type=int, default=1)
-    p.add_argument("--seconds", type=float, default=24.0)
+    p.add_argument("--seconds", type=float, default=14.0)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--size", choices=("full", "toy"), default="full",
-                   help="toy: every input at a few thousand turns (smoke mode)")
     p.add_argument("--smoke", action="store_true",
                    help="every workload at toy size, then the generator "
                         "determinism and oracle perturbation self-tests")
@@ -169,24 +167,29 @@ class Workload:
             self.turns = size.hub_turns
             wl.write_hub_corpus(spark, self.corpus, self.turns, seed)
             self.v1 = os.path.join(self.inp, "v1")
+            t = time.perf_counter()
             self.cli_main(["--fixture", "qops", "--transcripts", self.corpus,
                            "--output", self.v1, "--chunks", str(size.hub_chunks),
                            "--cpus", str(cores())])
+            log(f"{name}: v1 build {time.perf_counter() - t:.1f}s")
             self.ont, self.cfg, self.relabeled = wl.relabeled_qops()
             self.v2 = os.path.join(self.inp, "v2")
             wl.write_ontology_tables(self.ont, self.v2)
 
     def warm_up(self) -> None:
-        """For the ontology workload, one untimed CLI call of the same
-        shape and ontology on a small corpus, so the timed reps run with a
-        warm JVM and Python workers, and with the per-worker mention
-        kernel already compiled (the refresh workload's v1 build does the
-        same for it)."""
+        """One untimed CLI call of the timed shape, so the timed reps run
+        with a warm JVM and Python workers: for the ontology workload on a
+        small corpus (which also compiles the per-worker mention kernel),
+        for the refresh workload a whole refresh (the v1 build warms the
+        build path only; the first refresh runs 15-25% slower than the
+        next)."""
+        out = os.path.join(self.work, "out", "warmup")
         if self.name != "ontology_hpo18k":
+            self.cli_main(self.argv(out, self.corpus))
             return
         small = os.path.join(self.inp, "warmup_corpus")
         self.wl.write_planted_corpus(small, self.ont, WARMUP_TURNS, self.seed + 1)
-        self.cli_main(self.argv(os.path.join(self.work, "out", "warmup"), small))
+        self.cli_main(self.argv(out, small))
 
     def cli_main(self, argv: list[str]) -> dict:
         buf = io.StringIO()
@@ -255,30 +258,97 @@ def _spin(n: int) -> float:
     return time.perf_counter() - t
 
 
+def tree_cpu_s(pid: int) -> float:
+    """CPU seconds used so far by process ``pid`` and every process below
+    it (for the driver JVM: its Python worker daemon and the workers),
+    each counting its own time and that of its reaped children."""
+    procs = {}
+    for d in os.listdir("/proc"):
+        if d.isdigit():
+            try:
+                with open(f"/proc/{d}/stat") as fh:
+                    stat = fh.read()
+            except OSError:  # exited meanwhile
+                continue
+            f = stat[stat.rindex(")") + 2:].split()
+            # ppid; utime, stime, cutime, cstime
+            procs[int(d)] = (int(f[1]), sum(int(x) for x in f[11:15]))
+    children: dict[int, list[int]] = {}
+    for p, (ppid, _) in procs.items():
+        children.setdefault(ppid, []).append(p)
+    ticks, todo = 0, [pid]
+    while todo:
+        p = todo.pop()
+        ticks += procs[p][1] if p in procs else 0
+        todo += children.get(p, [])
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 class HostReference:
     """Seconds a fixed pure-Python loop takes on every core at once: the
-    host's current speed, independent of the program and of Spark.
+    host's current speed, measured while the program is idle.
 
     The host this runs on is shared: the same loop's time moves by 25%
     within seconds and the program's rep times by 35% between runs
     minutes apart, in every layer alike. Times are reported at a fixed
-    reference speed (``scale``) so that such drift cancels."""
+    reference speed (``scale``) so that such drift cancels.
 
-    LOOPS = 6_000_000
-    NOMINAL_S = 0.28  # the loop's time on an idle 4-core host of this kind
+    The program's processes (the driver JVM and every process below it)
+    stay alive between reps, and CPU they spend after a rep (JIT, GC,
+    cleaners, worker churn) would slow the loop and so lower the reported
+    times. A sample is therefore taken only once the program has gone
+    idle, and dropped when the program used CPU while it ran."""
 
-    def __init__(self):
+    LOOPS = 12_000_000  # long enough to average the host's second-to-second jitter
+    NOMINAL_S = 0.56  # the loop's time on an idle 4-core host of this kind
+    # The program counts as idle while it uses at most this share of the
+    # host's CPU (cores x wall time): one 10 ms clock tick in a 0.3 s
+    # window on 4 cores. After a rep it spends 0.05-0.15 s in the first
+    # 0.25 s, then about one tick every 2.5 s.
+    IDLE_SHARE = 0.01
+    IDLE_WINDOW_S = 0.3
+    MAX_WAIT_S = 20.0
+
+    def __init__(self, program_pid: int):
         import multiprocessing
 
+        self.pid = program_pid
         self.pool = multiprocessing.get_context("spawn").Pool(cores())
         self.pool.map(_spin, [1000] * cores())  # start the workers
         self.samples: list[float] = []
+        self.dropped = 0
+        self.waited_s = 0.0
+
+    def wait_idle(self, deadline: float) -> None:
+        """Return once the program was idle for an IDLE_WINDOW_S window,
+        or at ``deadline``."""
+        t = time.perf_counter()
+        c = tree_cpu_s(self.pid)
+        while time.perf_counter() < deadline:
+            time.sleep(self.IDLE_WINDOW_S)
+            now = tree_cpu_s(self.pid)
+            used, c = now - c, now
+            if used <= self.IDLE_SHARE * cores() * self.IDLE_WINDOW_S:
+                break
+        self.waited_s += time.perf_counter() - t
 
     def sample(self) -> None:
-        self.samples.append(statistics.median(self.pool.map(_spin, [self.LOOPS] * cores())))
+        """Add one sample during which the program stayed idle; give up
+        after MAX_WAIT_S (``scale`` then rests on the other samples)."""
+        deadline = time.perf_counter() + self.MAX_WAIT_S
+        while time.perf_counter() < deadline:
+            self.wait_idle(deadline)
+            c = tree_cpu_s(self.pid)
+            loop_s = statistics.median(self.pool.map(_spin, [self.LOOPS] * cores()))
+            if tree_cpu_s(self.pid) - c <= self.IDLE_SHARE * cores() * loop_s:
+                self.samples.append(loop_s)
+                return
+            self.dropped += 1
 
     def scale(self) -> float:
         """Factor from wall seconds now to seconds at the nominal speed."""
+        if not self.samples:
+            raise RuntimeError("the program never went idle for a host-speed sample")
         return self.NOMINAL_S / statistics.median(self.samples)
 
     def close(self) -> None:
@@ -335,23 +405,31 @@ class Measurement:
         self.tracer = Tracer(spark.sparkContext) if trace else None
         self.reps = []  # (seconds or None, out, summary, traced)
         # Reps run while the next one is expected to end within
-        # ``seconds`` (judged by the mean rep so far), and at least
-        # MIN_REPS run. With ``trace`` they alternate untraced and traced.
-        self.ref = HostReference()
+        # ``seconds`` at the reference host speed (judged by the mean rep
+        # so far), and at least MIN_REPS run. Counting time at the
+        # reference speed keeps the number of reps, and so how warm the
+        # JVM is in the reps the median picks, the same on a slow host:
+        # the first reps of a session run up to 25% slower than later
+        # ones. With ``trace`` they alternate untraced and traced.
+        self.ref = HostReference(spark.sparkContext._gateway.proc.pid)
         t0 = time.perf_counter()
-        while True:
-            self.ref.sample()
-            traced = trace and len(self.reps) % 2 == 1
-            res = timed_rep(wk, self.tracer if traced else None)
-            self.reps.append((*(res or (None, None, None)), traced))
-            log(f"{name}: rep {len(self.reps)} {'traced ' if traced else ''}"
-                f"{res[0] if res else float('nan'):.2f}s, host reference "
-                f"{self.ref.samples[-1]:.3f}s")
-            elapsed = time.perf_counter() - t0
-            if len(self.reps) >= MIN_REPS and elapsed * (1 + 1 / len(self.reps)) > seconds:
-                break
-
-        self.ref.close()
+        try:
+            while True:
+                self.ref.sample()
+                traced = trace and len(self.reps) % 2 == 1
+                res = timed_rep(wk, self.tracer if traced else None)
+                self.reps.append((*(res or (None, None, None)), traced))
+                log(f"{name}: rep {len(self.reps)} {'traced ' if traced else ''}"
+                    f"{res[0] if res else float('nan'):.2f}s")
+                elapsed = (time.perf_counter() - t0) * self.ref.scale()
+                if len(self.reps) >= MIN_REPS and elapsed * (1 + 1 / len(self.reps)) > seconds:
+                    break
+        finally:
+            self.ref.close()
+        log(f"{name}: host reference {len(self.ref.samples)} samples taken with the "
+            f"program idle ({', '.join(f'{x:.3f}s' for x in self.ref.samples)}), "
+            f"{self.ref.dropped} dropped as it was busy, "
+            f"{self.ref.waited_s:.1f}s waited for idle")
         expected, in_scope = wk.expected()
         self.precision = self.recall = 1.0
         for secs, out, _summary, _traced in self.reps:
@@ -380,7 +458,10 @@ class Measurement:
         """End-to-end metrics; call while the session is running."""
         if not self.ok:
             return {}
-        job_s = statistics.median(r[0] for r in self.ok) * self.ref.scale()
+        wall_s = statistics.median(r[0] for r in self.ok)
+        job_s = wall_s * self.ref.scale()
+        log(f"{self.wk.name}: unscaled job_s {wall_s:.4f}s, setup_s {self.setup_s:.4f}s, "
+            f"host reference {statistics.median(self.ref.samples):.4f}s")
         return {
             "job_s": (job_s, "s"),
             "turns_per_s": (self.wk.turns / job_s, "1/s"),
@@ -414,7 +495,7 @@ def run(args, work: str) -> dict:
 
     spark, session_s = start_session(work, trace=bool(args.trace))
     m = Measurement(spark, work, args.workload, args.seed, args.seconds,
-                    wl.SIZES[args.size], bool(args.trace), T_START)
+                    wl.SIZES["full"], bool(args.trace), T_START)
     metrics = {} if args.trace else m.end_to_end()
     stop_session(spark)
     if args.trace:
