@@ -102,13 +102,53 @@ def stop_session(spark) -> None:
     """Stop Spark and wait for the driver JVM (and so its Python worker
     daemon) to exit: the JVM leaves when its stdin pipe closes."""
     proc = spark.sparkContext._gateway.proc
-    spark.stop()
-    proc.stdin.close()
     try:
-        proc.wait(timeout=60)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        proc.wait()
+        spark.stop()
+    finally:
+        proc.stdin.close()
+        try:
+            proc.wait(timeout=60)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+
+
+def become_subreaper() -> None:
+    """Make processes orphaned below this one (the Python workers the JVM's
+    worker daemon forks, should the daemon exit first) this process's
+    children, so that ``reap_children`` can wait for them."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    if ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0):
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def reap_children(grace_s: float = 30.0) -> None:
+    """Wait until every process started below this one has ended: after
+    ``grace_s`` send SIGTERM to those still running, after twice that
+    SIGKILL. Returns once this process has no child left."""
+    import signal
+
+    t0 = time.perf_counter()
+    sent = None
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        except ChildProcessError:  # no child left
+            return
+        waited = time.perf_counter() - t0
+        sig = (signal.SIGKILL if waited > 2 * grace_s
+               else signal.SIGTERM if waited > grace_s else None)
+        if sig is not None and sig != sent:
+            left = descendants(os.getpid())
+            log(f"sending {sig.name} to {len(left)} process(es) still running")
+            for pid in left:
+                with contextlib.suppress(OSError):
+                    os.kill(pid, sig)
+            sent = sig
+        time.sleep(0.05)
 
 
 def log(msg: str) -> None:
@@ -250,18 +290,8 @@ class Workload:
 # ---------------------------------------------------------------------------
 
 
-def _spin(n: int) -> float:
-    t = time.perf_counter()
-    x = 0
-    for i in range(n):
-        x += i * i
-    return time.perf_counter() - t
-
-
-def tree_cpu_s(pid: int) -> float:
-    """CPU seconds used so far by process ``pid`` and every process below
-    it (for the driver JVM: its Python worker daemon and the workers),
-    each counting its own time and that of its reaped children."""
+def proc_table() -> dict[int, tuple[int, int]]:
+    """pid -> (ppid, CPU clock ticks used by it and its reaped children)."""
     procs = {}
     for d in os.listdir("/proc"):
         if d.isdigit():
@@ -273,15 +303,67 @@ def tree_cpu_s(pid: int) -> float:
             f = stat[stat.rindex(")") + 2:].split()
             # ppid; utime, stime, cutime, cstime
             procs[int(d)] = (int(f[1]), sum(int(x) for x in f[11:15]))
+    return procs
+
+
+def _tree(pid: int, procs: dict[int, tuple[int, int]]) -> list[int]:
+    """``pid`` and every process below it."""
     children: dict[int, list[int]] = {}
     for p, (ppid, _) in procs.items():
         children.setdefault(ppid, []).append(p)
-    ticks, todo = 0, [pid]
+    tree, todo = [], [pid]
     while todo:
         p = todo.pop()
-        ticks += procs[p][1] if p in procs else 0
+        tree.append(p)
         todo += children.get(p, [])
+    return tree
+
+
+def descendants(pid: int) -> list[int]:
+    return _tree(pid, proc_table())[1:]
+
+
+def tree_cpu_s(pid: int) -> float:
+    """CPU seconds used so far by process ``pid`` and every process below
+    it (for the driver JVM: its Python worker daemon and the workers),
+    each counting its own time and that of its reaped children."""
+    procs = proc_table()
+    ticks = sum(procs[p][1] for p in _tree(pid, procs) if p in procs)
     return ticks / os.sysconf("SC_CLK_TCK")
+
+
+# One process per core runs this loop at once, each starting when its
+# stdin closes, and prints the loop's time.
+SPIN = """
+import sys, time
+
+def spin(n):
+    t = time.perf_counter()
+    x = 0
+    for i in range(n):
+        x += i * i
+    return time.perf_counter() - t
+
+sys.stdin.read()
+print(spin(int(sys.argv[1])))
+"""
+
+
+def spin_on_every_core(n: int) -> float:
+    """Median seconds of ``n`` loop iterations run on every core at once."""
+    procs = [subprocess.Popen([sys.executable, "-c", SPIN, str(n)],
+                              stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True)
+             for _ in range(cores())]
+    try:
+        for p in procs:
+            p.stdin.close()
+        return statistics.median(float(p.stdout.read()) for p in procs)
+    finally:
+        for p in procs:
+            if p.poll() is None:
+                p.kill()
+            p.wait()
+            p.stdout.close()
 
 
 class HostReference:
@@ -310,11 +392,7 @@ class HostReference:
     MAX_WAIT_S = 20.0
 
     def __init__(self, program_pid: int):
-        import multiprocessing
-
         self.pid = program_pid
-        self.pool = multiprocessing.get_context("spawn").Pool(cores())
-        self.pool.map(_spin, [1000] * cores())  # start the workers
         self.samples: list[float] = []
         self.dropped = 0
         self.waited_s = 0.0
@@ -339,7 +417,7 @@ class HostReference:
         while time.perf_counter() < deadline:
             self.wait_idle(deadline)
             c = tree_cpu_s(self.pid)
-            loop_s = statistics.median(self.pool.map(_spin, [self.LOOPS] * cores()))
+            loop_s = spin_on_every_core(self.LOOPS)
             if tree_cpu_s(self.pid) - c <= self.IDLE_SHARE * cores() * loop_s:
                 self.samples.append(loop_s)
                 return
@@ -350,10 +428,6 @@ class HostReference:
         if not self.samples:
             raise RuntimeError("the program never went idle for a host-speed sample")
         return self.NOMINAL_S / statistics.median(self.samples)
-
-    def close(self) -> None:
-        self.pool.close()
-        self.pool.join()
 
 
 def timed_rep(wk: Workload, tracer=None):
@@ -413,19 +487,16 @@ class Measurement:
         # ones. With ``trace`` they alternate untraced and traced.
         self.ref = HostReference(spark.sparkContext._gateway.proc.pid)
         t0 = time.perf_counter()
-        try:
-            while True:
-                self.ref.sample()
-                traced = trace and len(self.reps) % 2 == 1
-                res = timed_rep(wk, self.tracer if traced else None)
-                self.reps.append((*(res or (None, None, None)), traced))
-                log(f"{name}: rep {len(self.reps)} {'traced ' if traced else ''}"
-                    f"{res[0] if res else float('nan'):.2f}s")
-                elapsed = (time.perf_counter() - t0) * self.ref.scale()
-                if len(self.reps) >= MIN_REPS and elapsed * (1 + 1 / len(self.reps)) > seconds:
-                    break
-        finally:
-            self.ref.close()
+        while True:
+            self.ref.sample()
+            traced = trace and len(self.reps) % 2 == 1
+            res = timed_rep(wk, self.tracer if traced else None)
+            self.reps.append((*(res or (None, None, None)), traced))
+            log(f"{name}: rep {len(self.reps)} {'traced ' if traced else ''}"
+                f"{res[0] if res else float('nan'):.2f}s")
+            elapsed = (time.perf_counter() - t0) * self.ref.scale()
+            if len(self.reps) >= MIN_REPS and elapsed * (1 + 1 / len(self.reps)) > seconds:
+                break
         log(f"{name}: host reference {len(self.ref.samples)} samples taken with the "
             f"program idle ({', '.join(f'{x:.3f}s' for x in self.ref.samples)}), "
             f"{self.ref.dropped} dropped as it was busy, "
@@ -494,10 +565,12 @@ def run(args, work: str) -> dict:
     import workloads as wl
 
     spark, session_s = start_session(work, trace=bool(args.trace))
-    m = Measurement(spark, work, args.workload, args.seed, args.seconds,
-                    wl.SIZES["full"], bool(args.trace), T_START)
-    metrics = {} if args.trace else m.end_to_end()
-    stop_session(spark)
+    try:
+        m = Measurement(spark, work, args.workload, args.seed, args.seconds,
+                        wl.SIZES["full"], bool(args.trace), T_START)
+        metrics = {} if args.trace else m.end_to_end()
+    finally:
+        stop_session(spark)
     if args.trace:
         metrics = m.layer_metrics(os.path.join(work, "events"), session_s)
     return as_json(m.result(), metrics)
@@ -512,12 +585,14 @@ def smoke(work: str) -> int:
     t = time.perf_counter()
     spark, session_s = start_session(work, trace=True)
     runs = {}
-    for name in WORKLOADS:
-        runs[name] = Measurement(spark, work, name, 7, 0.0, wl.SIZES["toy"], True,
-                                 time.perf_counter())
-        runs[name].e2e = runs[name].end_to_end()
-    ok = selftest.run(spark, os.path.join(work, "selftest"))
-    stop_session(spark)
+    try:
+        for name in WORKLOADS:
+            runs[name] = Measurement(spark, work, name, 7, 0.0, wl.SIZES["toy"], True,
+                                     time.perf_counter())
+            runs[name].e2e = runs[name].end_to_end()
+        ok = selftest.run(spark, os.path.join(work, "selftest"))
+    finally:
+        stop_session(spark)
     for name, m in runs.items():
         layer = m.layer_metrics(os.path.join(work, "events"), session_s)
         good = m.result()["correct"] and bool(layer)
@@ -533,6 +608,7 @@ def smoke(work: str) -> int:
 def main(argv=None) -> int:
     args = parse_args(argv)
     require_program()
+    become_subreaper()
     work = os.path.join(ROOT, ".perfbench_work", f"run-{os.getpid()}")
     prepare_env(work)
     try:
@@ -540,6 +616,7 @@ def main(argv=None) -> int:
             return smoke(work)
         result = run(args, work)
     finally:
+        reap_children()
         shutil.rmtree(work, ignore_errors=True)
     print(json.dumps(result))
     return 0
