@@ -716,18 +716,11 @@ def build_hierarchy(
                 reroot_nodes=node_set,
             )
             from ..schemas import ONTOLOGY_EDGES
+            from ..session import local_df
 
-            if reduced:
-                # Arrow path: a pandas frame serializes as columnar Arrow
-                # batches instead of per-row pickles — measured ~3× faster
-                # to first action at HPO scale (19.8k edges)
-                import pandas as _pd
-
-                return concepts.sparkSession.createDataFrame(
-                    _pd.DataFrame(reduced, columns=["child_iri", "parent_iri"]),
-                    ONTOLOGY_EDGES,
-                )
-            return concepts.sparkSession.createDataFrame([], ONTOLOGY_EDGES)
+            # Arrow local relation, not per-row pickles: measured ~3×
+            # faster to first action at HPO scale (19.8k edges)
+            return local_df(concepts.sparkSession, reduced, ONTOLOGY_EDGES)
 
     # distributed path: the same set logic as DataFrame programs
     dropped = concepts.filter(

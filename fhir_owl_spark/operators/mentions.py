@@ -286,10 +286,6 @@ def _automaton_for(terms: tuple[str, ...]) -> AhoCorasick:
 # ---------------------------------------------------------------------------
 
 
-def _term_regex(term: str) -> str:
-    return r"(?<![a-z0-9])" + re.escape(term) + r"(?![a-z0-9])"
-
-
 def extract_mention_pairs(
     transcripts: DataFrame,
     dictionary: DataFrame,
@@ -452,11 +448,6 @@ def extract_mentions(
     return transcripts.select("conv_id", "turn_idx", "text", *carry).mapInPandas(
         gen, out_schema
     )
-
-
-def mention_conv_pairs(mentions: DataFrame) -> DataFrame:
-    """Distinct (code, conv_id) — the mentions-in edge payload."""
-    return mentions.select("code", "conv_id").distinct()
 
 
 def score_mentions_with_context(

@@ -16,8 +16,10 @@ snapshot id for byte-identical resume reads):
   * Each completed chunk appends one lineage row
     (run_id, partition_id, input_rows, output_triples, timestamps,
     checkpoint_id) AFTER its data directory is fully written — the
-    lineage row is the commit record.
-  * Resume: chunks present in lineage are skipped; data directories of
+    lineage row is the commit record. It is a JVM-only local relation
+    (session.local_df): no Python worker runs in the commit.
+  * Resume: chunks present in lineage are skipped (an absent or empty
+    lineage answers without a Spark job); data directories of
     non-committed chunks are deleted and rewritten (write-ahead dirs,
     commit via lineage) — exactly-once output regardless of where the
     previous run died.
@@ -39,6 +41,7 @@ from ..operators.hierarchy import build_hierarchy
 from ..operators.mentions import extract_mentions
 from ..plans.build_graph import concept_triples, triples_with_key
 from ..schemas import LINEAGE, TRIPLES
+from ..session import local_df
 
 ONTOLOGY_CHUNK = -1
 
@@ -47,14 +50,20 @@ def _lineage_path(output_dir: str) -> str:
     return f"{output_dir}/_lineage"
 
 
-def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
+def _has_lineage(output_dir: str) -> bool:
     p = Path(_lineage_path(output_dir))
-    if not p.exists() or not any(p.iterdir()):
-        return spark.createDataFrame([], LINEAGE)
-    return spark.read.schema(LINEAGE).parquet(str(p))
+    return p.exists() and any(p.iterdir())
+
+
+def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
+    if not _has_lineage(output_dir):
+        return local_df(spark, [], LINEAGE)
+    return spark.read.schema(LINEAGE).parquet(_lineage_path(output_dir))
 
 
 def completed_chunks(spark: SparkSession, output_dir: str) -> set[int]:
+    if not _has_lineage(output_dir):
+        return set()
     return {
         r["partition_id"] for r in read_lineage(spark, output_dir).select("partition_id").collect()
     }
@@ -73,9 +82,7 @@ def _commit_lineage(spark, output_dir, run_id, chunk, input_rows, output_rows,
             checkpoint_id,
         )
     ]
-    spark.createDataFrame(row, LINEAGE).coalesce(1).write.mode("append").parquet(
-        _lineage_path(output_dir)
-    )
+    local_df(spark, row, LINEAGE).write.mode("append").parquet(_lineage_path(output_dir))
 
 
 def write_committed_chunk(
@@ -226,6 +233,6 @@ def read_triples(spark: SparkSession, output_dir: str) -> DataFrame:
         df = spark.read.parquet(f"{output_dir}/triples")
     except Exception:
         # every chunk empty → no part files anywhere → schema-less dirs
-        return spark.createDataFrame([], TRIPLES)
+        return local_df(spark, [], TRIPLES)
     committed = completed_chunks(spark, output_dir)
     return df.filter(F.col("chunk").isin(sorted(committed))).drop("chunk")

@@ -171,10 +171,9 @@ def refresh_graph(
         # re-scan of the v1 mention partition (the count is free: the
         # affected frame is already checkpointed)
         from ..schemas import TRIPLES
+        from ..session import local_df
 
-        new_mentions = spark.createDataFrame(
-            [], TRIPLES
-        ).select(*TRIPLE_COLS)
+        new_mentions = local_df(spark, [], TRIPLES).select(*TRIPLE_COLS)
     else:
         delta_dict = dictionary.join(F.broadcast(affected), "code", "semi")
         new_mentions = extract_mentions(

@@ -148,7 +148,8 @@ def parse_args(argv=None):
     p.add_argument("--version-needed", action="store_true")
     p.add_argument("--content", default="complete",
                    help="not-present|example|fragment|complete|supplement")
-    p.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    p.add_argument("--cpus", type=int, default=None,
+                   help="local[N] cores (default: SPARK_GRAFT_CPUS, else this process's CPUs)")
     return p.parse_args(argv)
 
 

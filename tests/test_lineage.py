@@ -3,17 +3,20 @@ produce the identical triple set (BASELINE.md resume-correctness row)."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from fhir_owl_spark import fixtures as fx
-from fhir_owl_spark.plans.build_graph import build_graph
+from fhir_owl_spark.plans.build_graph import build_graph, triples_with_key
 from fhir_owl_spark.plans.lineage import (
     build_graph_resumable,
     completed_chunks,
     read_lineage,
     read_triples,
+    write_committed_chunk,
 )
 
 
@@ -113,3 +116,40 @@ def test_read_skips_uncommitted_chunk(spark, inputs, tmp_path):
     after = triple_set(read_triples(spark, out))
     assert after == before
     assert not any(s.startswith("ORPHAN_") for s, _, _ in after)
+
+
+def _epoch_us(naive_utc: dt.datetime) -> int:
+    return (naive_utc - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+
+
+def test_commit_row_round_trip(spark, inputs, tmp_path):
+    """The lineage row of a commit reads back with exactly the values it
+    was given, and its timestamps are the call's naive-UTC wall clock.
+    Timestamps are compared as epoch microseconds, so the check does not
+    depend on the host's zone: a commit that read naive datetimes in the
+    process's local zone would be off by the zone offset."""
+    concepts = inputs[0]
+    out = str(tmp_path / "graph")
+    chunk = triples_with_key(
+        concepts.select(
+            F.col("iri").alias("subj"),
+            F.lit("has-display").alias("pred"),
+            F.col("label").alias("obj"),
+            F.lit("string").alias("obj_type"),
+            F.lit(None).cast("string").alias("conv_id"),
+        )
+    )
+    before = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    n_out = write_committed_chunk(spark, out, 3, chunk, 17, "run-abc")
+    after = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+
+    rows = read_lineage(spark, out).select(
+        "run_id", "partition_id", "input_rows", "output_triples", "checkpoint_id",
+        F.unix_micros("started_ts").alias("started_us"),
+        F.unix_micros("finished_ts").alias("finished_us"),
+    ).collect()
+    assert len(rows) == 1
+    r = rows[0]
+    assert n_out == chunk.count() > 0
+    assert tuple(r)[:5] == ("run-abc", 3, 17, n_out, "run-abc:3")
+    assert _epoch_us(before) <= r["started_us"] <= r["finished_us"] <= _epoch_us(after)

@@ -485,3 +485,131 @@ def test_bpe_pairs_plan_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
     for py_node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert py_node not in plan
+
+
+def _assert_local_relation(df):
+    plan = plan_of(df)
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_local_df_round_trips_types_as_local_relation(spark):
+    """session.local_df keeps the explicit schema and the values of every
+    column type it is used with (string, bool, int, long, timestamp, with
+    nulls, and zero rows), and plans as a JVM-only LocalTableScan."""
+    import datetime as dt
+
+    from pyspark.sql.types import (
+        BooleanType, IntegerType, LongType, StringType, StructField, StructType,
+        TimestampType,
+    )
+
+    from fhir_owl_spark.session import local_df
+
+    schema = StructType([
+        StructField("s", StringType(), nullable=False),
+        StructField("b", BooleanType()),
+        StructField("i", IntegerType()),
+        StructField("l", LongType()),
+        StructField("ts", TimestampType()),
+    ])
+    ts = dt.datetime(2026, 3, 1, 12, 30, 45, 123456)
+    rows = [("a", True, 7, 2**40, ts), ("b", None, None, None, None)]
+    df = local_df(spark, rows, schema)
+    _assert_local_relation(df)
+    assert df.schema == schema
+    got = df.select("s", "b", "i", "l", F.unix_micros("ts")).collect()
+    epoch_us = (ts - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+    assert [tuple(r) for r in got] == [
+        ("a", True, 7, 2**40, epoch_us), ("b", None, None, None, None)
+    ]
+    empty = local_df(spark, [], schema)
+    _assert_local_relation(empty)
+    assert empty.schema == schema and empty.collect() == []
+
+
+def test_driver_built_frames_are_local_relations(spark, tmp_path, monkeypatch):
+    """Every frame the build and refresh paths construct on the driver
+    (the lineage commit row; the empty lineage, triples, hierarchy and
+    refresh new-mention frames) is a LocalTableScan, never a pickled
+    ExistingRDD that each action re-reads through a Python worker."""
+    from fhir_owl_spark.operators.hierarchy import build_hierarchy
+    from fhir_owl_spark.plans.lineage import (
+        read_lineage, read_triples, write_committed_chunk,
+    )
+    from fhir_owl_spark.plans.refresh import refresh_graph
+    from fhir_owl_spark.schemas import TRANSCRIPTS
+
+    ont, cfg = fx.pizza_fixture()
+    concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
+    no_turns = spark.createDataFrame([], TRANSCRIPTS)
+    v1 = build_graph(spark, concepts, edges, synonyms, no_turns, cfg)
+
+    made = []
+    create = spark.createDataFrame
+
+    def spy(*args, **kwargs):
+        made.append(create(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(spark, "createDataFrame", spy)
+    out = str(tmp_path / "graph")
+    write_committed_chunk(spark, out, 0, v1, 0, "run")
+    # unchanged release: no affected code, so refresh plans an empty
+    # new-mention frame instead of scanning the corpus
+    refresh_graph(spark, v1, concepts, edges, synonyms, no_turns, cfg)
+    assert len(made) >= 2
+    for df in made:
+        _assert_local_relation(df)
+
+    _assert_local_relation(read_lineage(spark, str(tmp_path / "fresh")))
+    _assert_local_relation(read_triples(spark, str(tmp_path / "fresh")))
+    _assert_local_relation(
+        build_hierarchy(concepts.limit(0), edges.limit(0), cfg)
+    )
+
+
+def test_completed_chunks_on_fresh_output_runs_no_job(spark, tmp_path):
+    """A fresh output (no _lineage dir, or an empty one) has no committed
+    chunk, and saying so must not cost a Spark job."""
+    from fhir_owl_spark.plans.lineage import completed_chunks
+
+    sc = spark.sparkContext
+    group = "completed-chunks-fresh-output"
+    (tmp_path / "empty" / "_lineage").mkdir(parents=True)
+    sc.setJobGroup(group, "completed_chunks on fresh outputs")
+    try:
+        assert completed_chunks(spark, str(tmp_path / "absent")) == set()
+        assert completed_chunks(spark, str(tmp_path / "empty")) == set()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        spark.range(1).collect()  # control: this group does see jobs
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+
+
+def test_engine_modules_do_not_import_fixtures():
+    """fixtures.py is test data; the driver-side frame helper lives in
+    session.py so no module that plans or runs Spark work needs it.
+    (The ontology readers in sources/ share its Ontology data class.)"""
+    import ast
+    from pathlib import Path
+
+    import fhir_owl_spark
+
+    root = Path(fhir_owl_spark.__file__).parent
+    engine = [root / "session.py"] + [
+        f for sub in ("operators", "plans", "streaming")
+        for f in (root / sub).glob("*.py")
+    ]
+    for f in engine:
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            assert not any(n.split(".")[-1] == "fixtures" for n in names), f
